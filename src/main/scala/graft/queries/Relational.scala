@@ -60,7 +60,7 @@ object Relational {
     // (reference: detrendandstat_quad.R:4-6)
     "s1_csv_scan" -> ((s, _) => {
       s.read.option("header", true).schema(graft.wdi.WdiSchemas.wideSchema)
-        .csv("/root/reference/GDP_SSA_WDI.csv")
+        .csv(s"${graft.wdi.WdiSchemas.RefDir}/GDP_SSA_WDI.csv")
         .select(
           col("Country Code").as("country_code"),
           col("Series Code").as("series_code"),
@@ -976,9 +976,9 @@ object Relational {
         |    AS ewma
         |FROM l ORDER BY event_id""".stripMargin,
     "s1_csv_scan" ->
-      """SELECT "Country Code" AS country_code, "Series Code" AS series_code,
+      s"""SELECT "Country Code" AS country_code, "Series Code" AS series_code,
         |       "1960" AS y1960, "2019" AS y2019
-        |FROM read_csv('/root/reference/GDP_SSA_WDI.csv', header=true)
+        |FROM read_csv('${graft.wdi.WdiSchemas.RefDir}/GDP_SSA_WDI.csv', header=true)
         |ORDER BY country_code, series_code""".stripMargin,
     "s2_csv_sink" ->
       """SELECT l_returnflag, l_linestatus, count(*) AS n,

@@ -729,7 +729,7 @@ object VectorOps {
 
   /** The sampled swap gate's one-row aggregate — shared by the registry
     * entry (testdata SFs, oracle-checked) and the fixture certificate run
-    * (graft.tools.ShowEntry on the 400k corpus, recorded in ROUNDLOG). */
+    * (`graft.tools.Entry show` on the 400k corpus, recorded in ROUNDLOG). */
   private[graft] def rrfSwapSampledGate(s: SparkSession, d: String,
       every: Long = 500): DataFrame =
     rrfSwapOverlapSampledOf(s, d, every).agg(
@@ -1738,7 +1738,7 @@ object VectorOps {
     * fixture's 16 clusters put ~6k base vectors per cluster at cosine
     * 0.6-0.75 (p_bit ~0.71), so 8-bit buckets collide cluster-mates at
     * ~0.07/table — ~1.5e9 raw candidate pairs, the named cause of the
-    * ">35 min base prep" r14 staged out (ProbeEmbedPhases measures it).
+    * ">35 min base prep" r14 staged out (phase timings in ROUNDLOG r16).
     * 16 bits cuts the cluster-mate collision rate to p^16 ~ 0.004 (~15x
     * fewer candidates) while keeping >=0.9-cosine TRUE pairs effectively
     * exhaustive: a 0.9-cos pair has p_bit = 1 - acos(0.9)/pi ~ 0.857,
@@ -1787,35 +1787,6 @@ object VectorOps {
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
       .distinct()
     cosineVerify(emb, cand, threshold).orderBy("id_a", "id_b")
-  }
-
-  /** Named sub-plans of [[embedCosineDedup]]'s rebuild dataflow for the
-    * phase-level timing probe (graft.tools.ProbeEmbedPhases) — the r14
-    * adjudication tool for "why does the 400k-fixture embed rebuild's
-    * base prep exceed 35 minutes at 120k vectors?". Downstream phases
-    * build on lazily-checkpointed predecessors so each timed
-    * materialization isolates ITS OWN work (the ProbePhases discipline).
-    * `stat_pair_mass` is the closed-form candidate count
-    * (sum over buckets of C(sz,2), per table, pre-distinct) — the number
-    * that says whether the bucket join exploded without paying for it. */
-  private[graft] def embedDedupPhases(s: SparkSession, emb: DataFrame,
-      threshold: Double, kBits: Int = 8): Seq[(String, () => DataFrame)] = {
-    lazy val sigs = lshSignatures(s, emb, kBits = kBits, nTables = 24,
-      seed = 7L).localCheckpoint(false)
-    lazy val cand = sigs.as("x").join(sigs.as("y"), Seq("tbl", "bucket"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-    lazy val candD = cand.distinct().localCheckpoint(false)
-    Seq(
-      "signatures" -> (() => sigs),
-      "stat_pair_mass" -> (() => sigs.groupBy("tbl", "bucket")
-        .agg(count(lit(1)).as("n"))
-        .agg(sum(col("n") * (col("n") - 1) / 2).cast("long")
-          .as("candidate_pairs_pre_distinct"))),
-      "bucket_join_raw" -> (() => cand),
-      "candidate_distinct" -> (() => candD),
-      "cosine_verify" -> (() => cosineVerify(emb, candD, threshold)),
-    )
   }
 
   /** Exact cosine >= threshold verification over candidate pairs — shared
@@ -3115,7 +3086,7 @@ object VectorOps {
     // scale-WRONG configuration: any ingest touches every cell, so the
     // append path's touched-cell locality buys nothing (measured 0.89
     // append/rebuild ratio at k=16 vs 0.40 at k=512 on the 40k-doc Zipf
-    // fixture — TimeSemDedup, ROUNDLOG r12). The paper's regime grows k
+    // fixture — ROUNDLOG r12). The paper's regime grows k
     // with the corpus so cell sizes stay bounded (50k clusters on 600M
     // embeddings); this entry registers that regime at the k≈2.5·√n rule's
     // value for the sf0.01 contract corpus (n=500 → k=64; the same rule

@@ -14,7 +14,7 @@ import graft.wdi.{Regions, WdiPipelines, WdiSchemas, WdiEtl}
   */
 object WdiQueries {
 
-  private val RefDir = "/root/reference"
+  import WdiSchemas.RefDir
 
   /** (kind key, golden stem, per-country?, stat column names) */
   private def kinds(v: WdiPipelines.Variant): Seq[(String, String, Boolean, Seq[String])] = {

@@ -1,28 +1,19 @@
 package graft.wdi
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** CLI: run all four detrend pipelines and write the 28 output CSVs with
   * R-compatible formatting — the full equivalent of running the reference's
   * four Rscript entry points.
   *
-  * Usage: graft.wdi.WdiMain [inputDir] [outputDir]
+  * Usage: graft.wdi.WdiMain [inputDir] [outputDir]. `SPARK_MASTER`
+  * overrides the default `local[SPARK_GRAFT_CPUS]` master.
   */
 object WdiMain {
   def main(args: Array[String]): Unit = {
-    val inDir = if (args.length > 0) args(0) else "/root/reference"
+    val inDir = if (args.length > 0) args(0) else WdiSchemas.RefDir
     val outDir = if (args.length > 1) args(1) else "wdi_out"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .appName("wdi-pipelines")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
     WdiPipelines.variants.foreach { v =>
       WdiPipelines.outputs(spark, inDir, v).foreach { case (stem, df) =>
         val ordered =

@@ -10,6 +10,10 @@ import org.apache.spark.sql.types._
   * ("1960".."2019"), missing values encoded as empty cells (→ null).
   */
 object WdiSchemas {
+  /** The paper's reference directory: the three WDI input CSVs and the 28
+    * golden output CSVs. Every default input path and golden check reads it. */
+  val RefDir = "/root/reference"
+
   val YearStart = 1960
   val YearEnd   = 2019
   val yearCols: Seq[String] = (YearStart to YearEnd).map(_.toString)

@@ -1,5 +1,9 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.spark.sql.DataFrame
+
 /** Plan-shape regression net over every registered query: no query may plan
   * a cartesian product, and nested-loop joins are allowed only where they
   * are the intended shape (a broadcast query-sample joined on a non-equi
@@ -82,6 +86,33 @@ class PlanQualitySpec extends SparkSpec {
     // assignment pass of any IVF build)
     "sample_dsir", "ann_anchor_filtered_topk", "embed_cluster_stats",
     "sample_cluster_balanced")
+
+  /** Every registered entry, constructed once and shared by the two
+    * registry-wide checks. A construction failure is recorded with the
+    * first line of its error instead of aborting the check, so one broken
+    * entry cannot hide the plans of all the others. */
+  private lazy val built: Seq[(String, Either[String, DataFrame])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, Sf)).toEither.left.map(firstLine)
+    }
+
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse(e.getClass.getName)
+
+  /** Runs `check` on every entry that constructs and fails with its
+    * offenders plus every entry that could not be constructed. */
+  private def checkRegistry(header: String)(
+      check: (String, DataFrame) => Option[String]): Unit = {
+    val offenders = built.flatMap {
+      case (name, Right(df)) =>
+        Try(check(name, df)).fold(e => Some(s"$name: plan failed: ${firstLine(e)}"), identity)
+      case _ => None
+    }
+    val unbuilt = built.collect { case (name, Left(err)) => s"$name: not constructed: $err" }
+    if (offenders.nonEmpty || unbuilt.nonEmpty)
+      fail((header +: (offenders ++ unbuilt)).mkString("\n"))
+  }
 
   test("filters are pushed into the parquet scan") {
     val plan = SparkEntry.queries("p2_filter_in")(spark, Sf)
@@ -245,33 +276,26 @@ class PlanQualitySpec extends SparkSpec {
     // train_manifest's offset roll-up is the same shape over per-shard rows
     val reducedFrameAllowed =
       Set("pack_sequences", "pack_sequences_bpe", "train_manifest")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        if (reducedFrameAllowed(name)) None
-        else {
-          val plan = fn(spark, Sf).queryExecution.optimizedPlan
-          plan.collect {
-            case w: LWindow
-                if w.orderSpec.nonEmpty &&
-                  // a WindowGroupLimit below caps each partition's sorted
-                  // slice at k rows; a Limit below caps the whole frame
-                  w.child.collectFirst {
-                    case g: WindowGroupLimit => g
-                    case l: GlobalLimit => l
-                  }.isEmpty &&
-                  w.partitionSpec.forall(
-                    _.references.forall(a => lowCard(a.name))) =>
-              val part =
-                if (w.partitionSpec.isEmpty) "<global>"
-                else w.partitionSpec.flatMap(_.references.map(_.name)).mkString(",")
-              s"$name: ordered window over [$part]"
-          }.headOption
-        }
+    checkRegistry("full-partition sort windows over O(1)-cardinality keys (use " +
+        "Ranking.globalRank's range-exchange rank instead):") { (name, df) =>
+      if (reducedFrameAllowed(name)) None
+      else df.queryExecution.optimizedPlan.collect {
+        case w: LWindow
+            if w.orderSpec.nonEmpty &&
+              // a WindowGroupLimit below caps each partition's sorted
+              // slice at k rows; a Limit below caps the whole frame
+              w.child.collectFirst {
+                case g: WindowGroupLimit => g
+                case l: GlobalLimit => l
+              }.isEmpty &&
+              w.partitionSpec.forall(
+                _.references.forall(a => lowCard(a.name))) =>
+          val part =
+            if (w.partitionSpec.isEmpty) "<global>"
+            else w.partitionSpec.flatMap(_.references.map(_.name)).mkString(",")
+          s"$name: ordered window over [$part]"
+      }.headOption
     }
-    assert(offenders.isEmpty,
-      "full-partition sort windows over O(1)-cardinality keys (use " +
-        "Ranking.globalRank's range-exchange rank instead):\n" +
-        offenders.mkString("\n"))
   }
 
   test("the sampled swap gate's % 500 sample reaches the query scans") {
@@ -333,14 +357,12 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("no registered query plans a cartesian product") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, Sf).queryExecution.executedPlan.toString
-      val cartesian = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
-        !nestedLoopAllowed.contains(name)
-      if (cartesian || bnlj) Some(s"$name: ${if (cartesian) "CartesianProduct" else "BroadcastNestedLoopJoin"}")
+    checkRegistry("cartesian or unallowed nested-loop plans:") { (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct")
+      else if (plan.contains("BroadcastNestedLoopJoin") && !nestedLoopAllowed(name))
+        Some(s"$name: BroadcastNestedLoopJoin")
       else None
     }
-    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 /** Byte-level parity of the R-style CSV sink. */
 class RCsvSpec extends SparkSpec {
 
-  private val RefDir = "/root/reference"
+  import WdiSchemas.RefDir
   private val goldenFiles =
     for {
       stat <- Seq("sd_by_country", "sd_by_region", "sd_ratio_by_region",

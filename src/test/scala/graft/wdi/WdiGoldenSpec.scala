@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   */
 class WdiGoldenSpec extends SparkSpec {
 
-  private val RefDir = "/root/reference"
+  import WdiSchemas.RefDir
 
   private def loadGolden(stem: String): Map[String, Map[String, Double]] = {
     val lines = scala.io.Source.fromFile(s"$RefDir/$stem.csv").getLines().toSeq

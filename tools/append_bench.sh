@@ -2,7 +2,8 @@
 # Append-vs-rebuild measurement over a fixture dir (default: the Zipf
 # realistic-vocabulary corpus from graft.tools.ZipfFixture).
 #
-# Each measurement is ONE materialization in ONE fresh JVM (TimeEntry):
+# Each measurement is ONE materialization in ONE fresh JVM
+# (`graft.tools.Entry time`):
 #   append side  -> durable store pre-warmed with the base artifacts
 #                   (SPARK_GRAFT_INDEX_DIR), so the timed run pays
 #                   delta-only work — the incremental-ingest shape;
@@ -12,8 +13,7 @@
 #
 # A `_floor` probe (bare corpus scan + noop write in a fresh JVM) is
 # measured first so every ratio can be read against the fixed session
-# cost. The SemDeDup probe runs at the SCALE-RIGHT k (SEMK, default 512 —
-# the k~2.5*sqrt(n) regime at the 40k-doc fixture) through TimeSemDedup.
+# cost.
 #
 # Usage: tools/append_bench.sh [fixtureDir] [warmStoreDir] [jsonOut]
 #   jsonOut (optional): write the machine-readable ratio table — the
@@ -24,7 +24,6 @@ set -e
 FIX=${1:-fixtures/zipf}
 STORE=${2:-/tmp/zipf_warm_store}
 OUT=${3:-}
-SEMK=${SEMK:-512}
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 # full JDK17 add-opens set (matches build.sbt): at the 400k-doc fixture,
 # checkpoint blocks spill SERIALIZED and Kryo's ByteBuffer serializer
@@ -58,7 +57,7 @@ dedup_embed_append:dedup_embed_cosine
 # maintenance (r14 VERDICT weak). Maintenance is now its own two pairs:
 # the delta postings segment (O(delta) vs the full tokenize) and the
 # weight refresh (re-weight stored postings vs tokenize-and-weigh).
-# Serving wall-clock is recorded separately via TimeEntry sim_bm25_topk.
+# Serving wall-clock is recorded separately via `Entry time ... sim_bm25_topk`.
 
 # KEEP_STORE=1 reuses an already-warmed store (staged runs on the large
 # fixtures, where one prep pass is tens of minutes)
@@ -66,11 +65,8 @@ if [ "${KEEP_STORE:-0}" != "1" ]; then rm -rf "$STORE"; fi
 echo "# prep: warming $STORE with base artifacts (untimed)"
 for p in $PAIRS; do
   a=${p%%:*}
-  SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.TimeEntry "$FIX" "$a" >/dev/null 2>&1
+  SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.Entry time "$FIX" "$a" >/dev/null 2>&1
 done
-if [ "${SKIP_SEMDEDUP:-0}" != "1" ]; then
-  SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.TimeSemDedup "$FIX" append "$SEMK" >/dev/null 2>&1
-fi
 
 median() { printf '%s\n' "$@" | sort -n | awk '{v[NR]=$1} END{print v[int((NR+1)/2)]}'; }
 
@@ -89,7 +85,7 @@ require_time() { # <value> <label>
 
 ft=()
 for i in 1 2 3; do
-  t="$($JAVA graft.tools.TimeEntry "$FIX" _floor 2>/dev/null | awk '$1=="TIME_ENTRY"{print $3}')"
+  t="$($JAVA graft.tools.Entry time "$FIX" _floor 2>/dev/null | awk '$1=="TIME_ENTRY"{print $3}')"
   require_time "$t" "_floor"
   ft+=("$t")
 done
@@ -100,13 +96,13 @@ for p in $PAIRS; do
   a=${p%%:*}; r=${p##*:}
   at=(); rt=(); astore=""
   for i in 1 2 3; do
-    out="$(SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.TimeEntry "$FIX" "$a" 2>/dev/null)"
+    out="$(SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.Entry time "$FIX" "$a" 2>/dev/null)"
     t="$(printf '%s\n' "$out" | awk '$1=="TIME_ENTRY"{print $3}')"
     # REUSE certificate: cb=0 on the warmed-store side proves the timed
     # JVM rebuilt nothing — the append reading is delta work + store reads
     astore="$(printf '%s\n' "$out" | awk '$1=="TIME_ENTRY_STORE"{print $3" "$4}')"
     require_time "$t" "append:$a"; at+=("$t")
-    t="$(SPARK_GRAFT_NO_INDEX_STORE=1 $JAVA graft.tools.TimeEntry "$FIX" "$r" 2>/dev/null | awk '$1=="TIME_ENTRY"{print $3}')"
+    t="$(SPARK_GRAFT_NO_INDEX_STORE=1 $JAVA graft.tools.Entry time "$FIX" "$r" 2>/dev/null | awk '$1=="TIME_ENTRY"{print $3}')"
     require_time "$t" "rebuild:$r"; rt+=("$t")
   done
   am=$(median "${at[@]}"); rm_=$(median "${rt[@]}")
@@ -114,23 +110,6 @@ for p in $PAIRS; do
   echo "PAIR append=$a ${am}s rebuild=$r ${rm_}s ratio=$ratio store=[$astore] (runs: append=${at[*]} rebuild=${rt[*]})"
   printf '%s\t%s\t%s\t%s\t%s\t%s\t%s\n' "$a:$r" "$am" "$rm_" "$ratio" "${at[*]}" "${rt[*]}" "$astore" >> "$ROWS"
 done
-
-# SemDeDup at the scale-right k (the registered entries pin k=16 for the
-# Lloyd-replay oracle; the paper's regime grows k with the corpus).
-# SKIP_SEMDEDUP=1 skips it in staged PAIRS_OVERRIDE runs.
-if [ "${SKIP_SEMDEDUP:-0}" != "1" ]; then
-at=(); rt=()
-for i in 1 2 3; do
-  t="$(SPARK_GRAFT_INDEX_DIR=$STORE $JAVA graft.tools.TimeSemDedup "$FIX" append "$SEMK" 2>/dev/null | awk '/^TIME_SEMDEDUP/{print $4}')"
-  require_time "$t" "append:semdedup_k$SEMK"; at+=("$t")
-  t="$(SPARK_GRAFT_NO_INDEX_STORE=1 $JAVA graft.tools.TimeSemDedup "$FIX" rebuild "$SEMK" 2>/dev/null | awk '/^TIME_SEMDEDUP/{print $4}')"
-  require_time "$t" "rebuild:semdedup_k$SEMK"; rt+=("$t")
-done
-am=$(median "${at[@]}"); rm_=$(median "${rt[@]}")
-ratio=$(python3 -c "print(round($am/$rm_,3))")
-echo "PAIR append=semdedup_k$SEMK ${am}s rebuild=semdedup_k$SEMK ${rm_}s ratio=$ratio (runs: append=${at[*]} rebuild=${rt[*]})"
-printf '%s\t%s\t%s\t%s\t%s\t%s\t%s\n' "semdedup_k$SEMK:semdedup_k$SEMK" "$am" "$rm_" "$ratio" "${at[*]}" "${rt[*]}" "" >> "$ROWS"
-fi
 
 if [ -n "$OUT" ]; then
   NDOCS=$(python3 -c "
